@@ -51,21 +51,14 @@ object Annotator {
   }
 
   /** The default recognizer: the broadcast-automaton dictionary scan on the
-    * native Catalyst plan. */
-  final class DictionaryRecognizer(model: Broadcast[AnnotatorModel]) extends Recognizer {
-    override def recognize(extracted: DataFrame, opts: AnnotateOptions): DataFrame =
-      NativeAnnotate.annotateMatches(extracted, model,
-        opts.longestOnly, opts.wholeWordOnly)
-  }
-
-  /** The >driver-memory regime behind the same seam: a dictionary too large
-    * to build/broadcast whole routes through [[graft.annotate.Sharded]]'s
-    * term-id shards; everything downstream of the match stream is
-    * unchanged. Spec-pinned equal to [[DictionaryRecognizer]]. */
-  final class ShardedDictionaryRecognizer(models: Seq[Broadcast[AnnotatorModel]])
+    * native Catalyst plan, over one model or the term-id shards of a
+    * dictionary too large to build/broadcast whole
+    * ([[graft.annotate.Sharded.buildModels]]) — the match stream is the
+    * same for any shard count. */
+  final class DictionaryRecognizer(models: Seq[Broadcast[AnnotatorModel]])
       extends Recognizer {
     override def recognize(extracted: DataFrame, opts: AnnotateOptions): DataFrame =
-      NativeAnnotate.annotateMatchesSharded(extracted, models,
+      NativeAnnotate.annotateMatches(extracted, models,
         opts.longestOnly, opts.wholeWordOnly)
   }
 
@@ -188,7 +181,7 @@ object Annotator {
               model: Broadcast[AnnotatorModel],
               request: Request = Request(),
               recognizer: Option[Recognizer] = None): DataFrame =
-    recognizer.getOrElse(new DictionaryRecognizer(model))
+    recognizer.getOrElse(new DictionaryRecognizer(Seq(model)))
       .recognize(extracted, request.opts)
 
   /** The reference's `score` mode dispatch over a per-occurrence match

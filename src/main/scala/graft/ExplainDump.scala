@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for the headline queries so plan
   * properties (filter pushdown, column pruning, broadcast joins, whole-stage
   * codegen spans) can be audited — see PLANS.md for the annotated results. */
@@ -12,13 +10,7 @@ object ExplainDump {
       else Seq("q_pushdown_agg", "q_join_nation", "q_window_topk",
         "ann_triples_native", "ann_hier", "ann_score", "dedup_minhash",
         "sim_topk", "text_quality")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Main.session("graft-explain-dump")
     if (args.length > 1 && args(1) == "--census") {
       // full-registry plan census: per query, count the node classes that
       // matter at 100 TB (sort-merge joins, nested-loop/cartesian, shuffle

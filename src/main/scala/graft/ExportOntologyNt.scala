@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.fixture.OntologyFixture
@@ -14,10 +13,7 @@ import graft.io.NTriples
 object ExportOntologyNt {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.length > 0) args(0) else "/tmp/graft-nt-export"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Main.session("graft-export-ontology-nt")
     val onts = NTriples.writeSubmissions(OntologyFixture.conceptsDf(spark),
       OntologyFixture.edgesDf(spark), outDir)
     println(s"exported ${onts.length} submissions to $outDir")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.graph.KgGraph
@@ -72,15 +72,7 @@ object GraphScaleProbe {
     // optional 2nd arg: run only one section ("lp" today) — re-probing a
     // new operator must not pay for re-measuring the settled ones
     val section = args.drop(1).headOption.getOrElse("all")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-graph-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Main.session("graft-graph-scale-probe")
     import spark.implicits._
 
     val fs = new org.apache.hadoop.fs.Path(corpusPath)

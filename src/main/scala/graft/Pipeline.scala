@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.annotate.{Corpus, Expand, Filters, Scoring}
-import graft.dict.{AutomatonBuild, DictBuild}
+import graft.dict.DictBuild
 import graft.emit.Triples
 import graft.fixture.OntologyFixture
 import graft.graph.Closure
@@ -116,8 +116,8 @@ object Pipeline {
       ontology: Option[OntologyTables] = None,
       /** 1 = single broadcast automaton; >1 = the S4 sharded regime for
         * dictionaries beyond driver memory — shards built + broadcast one
-        * at a time, scanned by the native sharded Generator. Output is
-        * spec-identical across values. */
+        * at a time, scanned in one pass by the same match Generator.
+        * Output is spec-identical across values. */
       dictShards: Int = 1,
       /** Materialize the downstream KG analytics as additional checkpointed
         * stages (north_rule "graph materialize"): concept co-occurrence
@@ -224,18 +224,9 @@ object Pipeline {
   private def scanAndFilter(spark: SparkSession, cfg: Config, dict: DataFrame,
                             corpus: DataFrame, concepts: DataFrame,
                             version: String): DataFrame = {
-    val scanned =
-      if (cfg.dictShards <= 1) {
-        val bcast = AutomatonBuild.broadcastModel(spark,
-          AutomatonBuild.build(spark, dict, version))
-        graft.annotate.NativeAnnotate.annotateMatches(
-          corpus, bcast, cfg.opts.longestOnly, cfg.opts.wholeWordOnly)
-      } else {
-        val shards = graft.annotate.Sharded.buildModels(
-          spark, dict, version, cfg.dictShards)
-        graft.annotate.NativeAnnotate.annotateMatchesSharded(
-          corpus, shards, cfg.opts.longestOnly, cfg.opts.wholeWordOnly)
-      }
+    val models = graft.annotate.Sharded.buildModels(spark, dict, version, cfg.dictShards)
+    val scanned = graft.annotate.NativeAnnotate.annotateMatches(
+      corpus, models, cfg.opts.longestOnly, cfg.opts.wholeWordOnly)
     Filters(
       scanned
         .withColumnRenamed("class_iri", "classIri")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only per-query JOB profiler (not part of the driver contract): runs a
   * registry query once warm, then once instrumented with a SparkListener that
@@ -16,16 +15,7 @@ object QueryJobProfile {
     require(args.length >= 2, "usage: QueryJobProfile <sfDir> <query>...")
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-query-job-profile")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Main.session("graft-query-job-profile")
 
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only interleaved query prober (not part of the driver contract).
   * This VM's throughput drifts >2× minute-to-minute (hypervisor steal), so a
   * single timing — or even best-of-2 of ADJACENT runs — can misattribute a
@@ -17,16 +15,7 @@ object QueryProbe {
     val sfDir = args(0)
     val rounds = args(1).toInt
     val names = args.drop(2).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-query-probe")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Main.session("graft-query-probe")
 
     val fns = names.map(n => n -> SparkEntry.queries(n))
     // warmup: one untimed pass each (model/closure caches, codegen, JIT)

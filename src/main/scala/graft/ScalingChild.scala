@@ -10,29 +10,21 @@ object CorpusPrep {
     val path = if (args.nonEmpty) args(0) else "/tmp/graft-bench-corpus"
     val amplify = sys.env.getOrElse("SPARK_GRAFT_AMPLIFY", "400").toInt
     val pad = sys.env.getOrElse("SPARK_GRAFT_PAD", "19").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Main.session("graft-corpus-prep")
     val n = Bench.materializeScalingCorpus(spark, sfDir, amplify, pad, path, files = 32)
     println(s"CORPUS_DOCS $n")
     spark.stop()
   }
 }
 
-/** Dev-only: lower-bound timings at a given core count — parquet scan floor
-  * (read + decompress + sum of text bytes, no annotate) vs the full native
-  * annotate — to attribute remaining wall time. */
+/** Dev-only: lower-bound timings at `SPARK_GRAFT_CPUS` cores — parquet scan
+  * floor (read + decompress + sum of text bytes, no annotate) vs the full
+  * native annotate — to attribute remaining wall time.
+  * Usage: runMain graft.FloorProbe <corpusPath> */
 object FloorProbe {
   def main(args: Array[String]): Unit = {
     val corpusPath = args(0)
-    val cores = args(1).toInt
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Main.session("graft-floor-probe")
     import org.apache.spark.sql.functions._
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -48,17 +40,14 @@ object FloorProbe {
 
 /** Dev-only: same-JVM interleaved A/B of the native Generator annotate vs
   * the typed mapPartitions form — removes JVM-startup and machine-drift
-  * asymmetry from the comparison (both run warm, alternating). */
+  * asymmetry from the comparison (both run warm, alternating), at
+  * `SPARK_GRAFT_CPUS` cores.
+  * Usage: runMain graft.ABProbe <corpusPath> [rounds] */
 object ABProbe {
   def main(args: Array[String]): Unit = {
     val corpusPath = args(0)
-    val cores = args(1).toInt
-    val rounds = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val rounds = if (args.length > 1) args(1).toInt else 3
+    val spark = Main.session("graft-ab-probe")
     val (model, maps) = Bench.buildModel(spark)
     val corpus = spark.read.parquet(corpusPath)
     def run(native: Boolean): Double = {

@@ -169,19 +169,6 @@ object SparkEntry {
   private[graft] def matches(s: SparkSession, dir: String): DataFrame =
     graft.annotate.NativeAnnotate.annotateMatches(corpus(s, dir), model(s))
 
-  /** Scale-adaptive doc-scan respread (optimization-guide §2.5: an input
-    * with fewer splits than cores — a single-row-group parquet, a gzip
-    * member — runs every downstream map nearly serially; repartition right
-    * after the read). IDENTITY whenever the scan already carries ≥ cores
-    * partitions, i.e. at any real corpus size — the exchange only exists
-    * where the alternative is an idle cluster. Safe only on scan-shaped
-    * frames (`.rdd` on a post-exchange frame would force eager AQE
-    * execution). */
-  private[graft] def spreadScan(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
   /** [[matches]] over the respread scan — for the graph-tier consumers
     * whose cost is the corpus-wide annotate map feeding an aggregation
     * (cooccurrence chains, itemsets, the AMS key stream). The flagship
@@ -198,7 +185,7 @@ object SparkEntry {
     * 1.4 → 3.4 s, kg_truthfinder 2.0 → 4.0 s wall; measured and
     * reverted). */
   private[graft] def corpusPar(s: SparkSession, dir: String): DataFrame =
-    Corpus.extract(Corpus.fromDriverTable(spreadScan(docsTable(s, dir))))
+    Corpus.extract(Corpus.fromDriverTable(Corpus.spread(docsTable(s, dir))))
 
   private[graft] def matchesPar(s: SparkSession, dir: String): DataFrame =
     graft.annotate.NativeAnnotate.annotateMatches(corpusPar(s, dir), model(s))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: the GraphScaleProbe `all` section's TransE phase in isolation —
@@ -10,14 +9,7 @@ import org.apache.spark.sql.functions._
 object TranseProbe {
   def main(args: Array[String]): Unit = {
     val corpusPath = args.headOption.getOrElse("/tmp/graft-bench-corpus")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Main.session("graft-transe-probe")
     val docs = spark.read.parquet(corpusPath)
     val facts = docs.select(col("url").as("subj"),
         lit("hasAnnotation").as("pred"),

@@ -3,6 +3,7 @@ package graft.annotate
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, Project, Union}
 import org.apache.spark.sql.functions._
 
 /** A0 — corpus adaptation + deterministic HTML→text extraction.
@@ -28,6 +29,25 @@ object Corpus {
 
   def readDriverDocuments(spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame =
     fromDriverTable(spark.read.parquet(s"$sfDir/documents.parquet"))
+
+  /** Scale-adaptive respread of a raw document scan (optimization-guide
+    * §2.5: an input with fewer splits than cores — a single-row-group
+    * parquet, a gzip member, a small-file tail — runs every downstream map
+    * nearly serially; repartition right after the read). IDENTITY whenever
+    * the scan already carries ≥ cores partitions, i.e. at any real corpus
+    * size. The partition probe (`.rdd`) would force eager AQE stage
+    * execution on a frame holding an exchange, so any input whose analyzed
+    * plan holds more than scans, projections, filters and unions is
+    * returned as is, unprobed. */
+  def spread(docs: DataFrame): DataFrame = {
+    val scanShaped = docs.queryExecution.analyzed.find {
+      case _: LeafNode | _: Project | _: Filter | _: Union => false
+      case _ => true
+    }.isEmpty
+    val target = docs.sparkSession.sparkContext.defaultParallelism
+    if (scanShaped && docs.rdd.getNumPartitions < target) docs.repartition(target)
+    else docs
+  }
 
   /** Pure, deterministic HTML→text (same bytes in → same string out, every
     * run, every JVM): drop script/style/comments, strip tags, decode the

@@ -79,22 +79,18 @@ object NativeAnnotate {
   def annotateMatches(extracted: DataFrame,
                       model: Broadcast[AnnotatorModel],
                       longestOnly: Boolean = false,
-                      wholeWord: Boolean = true): DataFrame = {
-    val gen = AnnotateMatchesGen(GraftShim.expression(col("text")), model,
-      longestOnly, wholeWord)
-    extracted.select(col("url"), GraftShim.column(gen))
-  }
+                      wholeWord: Boolean = true): DataFrame =
+    annotateMatches(extracted, Seq(model), longestOnly, wholeWord)
 
-  /** Sharded-dictionary match stream on the native plan (S4 scale path —
-    * see [[AnnotateMatchesShardedGen]]); spec-pinned equal to the typed
-    * [[Sharded.annotateDirect]] and to the single-automaton scan. */
-  def annotateMatchesSharded(extracted: DataFrame,
-                             models: Seq[Broadcast[AnnotatorModel]],
-                             longestOnly: Boolean = false,
-                             wholeWord: Boolean = true): DataFrame = {
+  /** The same match stream over 1..k term-id shard models
+    * ([[Sharded.buildModels]]); output is identical for every k. */
+  def annotateMatches(extracted: DataFrame,
+                      models: Seq[Broadcast[AnnotatorModel]],
+                      longestOnly: Boolean,
+                      wholeWord: Boolean): DataFrame = {
     require(models.nonEmpty, "at least one shard model required")
-    val gen = AnnotateMatchesShardedGen(GraftShim.expression(col("text")),
-      models, longestOnly, wholeWord)
+    val gen = AnnotateMatchesGen(GraftShim.expression(col("text")), models,
+      longestOnly, wholeWord)
     extracted.select(col("url"), GraftShim.column(gen))
   }
 }
@@ -103,10 +99,18 @@ object NativeAnnotate {
   * dictionary OCCURRENCE — `(from, to, text, class_iri, ont, match_type)`,
   * offsets 1-based inclusive (reference mgrep wire-tuple parity) — the
   * native-plan form of [[Scan.annotateDirect]] used by the persisted-matches
-  * pipeline stage and the request-filter queries. */
+  * pipeline stage and the request-filter queries.
+  *
+  * `models` are the term-id shards of one dictionary ([[Sharded]]). With one
+  * model the automaton applies `longest_only` itself and hits go straight to
+  * payload fan-out. With k > 1 every shard scans the SAME in-place
+  * `UTF8String` bytes, hits merge into a combined buffer, `longest_only`
+  * applies to the cross-shard union, and each hit's payload resolves through
+  * its owning shard (`termId % k` — the sharding key makes origin
+  * recoverable). Either way the plan is one zero-island `Generate`. */
 case class AnnotateMatchesGen(
     child: Expression,
-    model: Broadcast[AnnotatorModel],
+    models: Seq[Broadcast[AnnotatorModel]],
     longestOnly: Boolean,
     wholeWord: Boolean = true)
   extends UnaryExpression with Generator with CodegenFallback {
@@ -126,13 +130,38 @@ case class AnnotateMatchesGen(
       s"annotate_matches requires STRING input, got ${other.catalogString}")
   }
 
-  @transient private lazy val compiled = CompiledMatcher.cached(model)
+  @transient private lazy val compiled = CompiledMatcher.cached(models)
   @transient private lazy val buf = new graft.dict.HitBuffer()
+  @transient private lazy val comb = new graft.dict.HitBuffer()
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val t = child.eval(input)
-    if (t == null) Iterator.empty
-    else compiled.matches(t.asInstanceOf[UTF8String], buf, longestOnly, wholeWord)
+    if (t == null) return Iterator.empty
+    val text = t.asInstanceOf[UTF8String]
+    val k = compiled.length
+    if (k == 1) return compiled(0).matches(text, buf, longestOnly, wholeWord)
+    comb.clear()
+    var ascii = true
+    var s = 0
+    while (s < k) {
+      // longestOnly deliberately false per shard — the policy is cross-shard
+      ascii = compiled(s).scanRaw(text, buf, longestOnly = false, wholeWord)
+      comb.appendFromMapped(buf, k, s) // local ids → global
+      s += 1
+    }
+    if (longestOnly) comb.longestPerStartInPlace()
+    if (comb.size == 0) return Iterator.empty
+    val decoded: String = if (ascii) null else text.toString
+    val out = new mutable.ArrayBuffer[InternalRow](comb.size)
+    var i = 0
+    while (i < comb.size) {
+      val tid = comb.termId(i)
+      // owner shard = tid % k; its payload is indexed by LOCAL id = tid / k
+      compiled(tid % k).emitHit(out, text, ascii, decoded,
+        comb.from(i), comb.to(i), tid / k)
+      i += 1
+    }
+    out.iterator
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -173,8 +202,8 @@ final class CompiledMatcher(m: AnnotatorModel) extends Serializable {
     out.iterator
   }
 
-  /** Raw automaton pass (no payload fan-out) — the sharded generator scans
-    * each shard with this, merges buffers, then emits via [[emitHit]]. */
+  /** Raw automaton pass (no payload fan-out) — the k > 1 match generator
+    * scans each shard with this, merges buffers, then emits via [[emitHit]]. */
   private[annotate] def scanRaw(text: UTF8String, buf: graft.dict.HitBuffer,
                                 longestOnly: Boolean, wholeWord: Boolean): Boolean =
     auto.scanUtf8Into(text.getBaseObject, text.getBaseOffset,
@@ -200,72 +229,6 @@ final class CompiledMatcher(m: AnnotatorModel) extends Serializable {
       j += 1
     }
   }
-}
-
-/** S4 on the native tier: the sharded-dictionary scan (>driver-memory
-  * regime, [[graft.annotate.Sharded]]) as a Catalyst Generator — k term-id
-  * shard automatons scan the SAME in-place `UTF8String` bytes in one pass,
-  * hits merge into a combined buffer, `longest_only` applies to the
-  * cross-shard union, and each hit's payload resolves through its owning
-  * shard (`termId % k` — the sharding key makes origin recoverable). Same
-  * zero-island `Generate` plan as the single-dictionary scan. */
-case class AnnotateMatchesShardedGen(
-    child: Expression,
-    models: Seq[Broadcast[AnnotatorModel]],
-    longestOnly: Boolean,
-    wholeWord: Boolean = true)
-  extends UnaryExpression with Generator with CodegenFallback {
-
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("from", IntegerType, nullable = false),
-    StructField("to", IntegerType, nullable = false),
-    StructField("text", StringType, nullable = false),
-    StructField("class_iri", StringType, nullable = false),
-    StructField("ont", StringType, nullable = false),
-    StructField("match_type", StringType, nullable = false)))
-  override def prettyName: String = "annotate_matches_sharded"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"annotate_matches_sharded requires STRING input, got ${other.catalogString}")
-  }
-
-  @transient private lazy val compiled = CompiledMatcher.cachedAll(models)
-  @transient private lazy val shardBuf = new graft.dict.HitBuffer()
-  @transient private lazy val comb = new graft.dict.HitBuffer()
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val t = child.eval(input)
-    if (t == null) return Iterator.empty
-    val text = t.asInstanceOf[UTF8String]
-    val k = compiled.length
-    comb.clear()
-    var ascii = true
-    var s = 0
-    while (s < k) {
-      // longestOnly deliberately false per shard — the policy is cross-shard
-      ascii = compiled(s).scanRaw(text, shardBuf, longestOnly = false, wholeWord)
-      comb.appendFromMapped(shardBuf, k, s) // local ids → global
-      s += 1
-    }
-    if (longestOnly) comb.longestPerStartInPlace()
-    if (comb.size == 0) return Iterator.empty
-    val decoded: String = if (ascii) null else text.toString
-    val out = new mutable.ArrayBuffer[InternalRow](comb.size)
-    var i = 0
-    while (i < comb.size) {
-      val tid = comb.termId(i)
-      // owner shard = tid % k; its payload is indexed by LOCAL id = tid / k
-      compiled(tid % k).emitHit(out, text, ascii, decoded,
-        comb.from(i), comb.to(i), tid / k)
-      i += 1
-    }
-    out.iterator
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** JVM-wide identity registry for broadcast VALUES. Cache keys must not be
@@ -332,18 +295,16 @@ private[annotate] final class CompileCache[V](initialMax: Int) {
 object CompiledMatcher {
   private val cache = new CompileCache[CompiledMatcher](8)
 
-  def cached(model: Broadcast[AnnotatorModel]): CompiledMatcher = {
-    val value = model.value
-    cache.getOrCompute(ValueIdentity.of(value).toString)(new CompiledMatcher(value))
-  }
-
-  /** Sharded-scan entry point: k live matchers at once, so the cache must
-    * hold all of them plus headroom for a concurrent single-dictionary scan
-    * — otherwise k > capacity thrashes the LRU (every task recompiles every
-    * shard, serialized under the lock). */
-  def cachedAll(models: Seq[Broadcast[AnnotatorModel]]): Array[CompiledMatcher] = {
+  /** One matcher per shard model. k live shard matchers at once, so the
+    * cache must hold all of them plus headroom for a concurrent
+    * single-dictionary scan — otherwise k > capacity thrashes the LRU
+    * (every task recompiles every shard, serialized under the lock). */
+  def cached(models: Seq[Broadcast[AnnotatorModel]]): Array[CompiledMatcher] = {
     cache.ensureCapacity(math.max(8, 2 * models.length))
-    models.map(cached).toArray
+    models.map { model =>
+      val value = model.value
+      cache.getOrCompute(ValueIdentity.of(value).toString)(new CompiledMatcher(value))
+    }.toArray
   }
 }
 

@@ -1960,8 +1960,10 @@ object KgGraph {
     // values drop), so Σc is strictly decreasing until the fixpoint and
     // `Σc unchanged ⇔ every node unchanged` — one 1-row aggregate over the
     // just-materialized round instead of the former full next⋈prev join +
-    // filter + count per round (an extra exchange of the whole label table)
-    var cSum = c.agg(sum(col("c"))).first().getLong(0)
+    // filter + count per round (an extra exchange of the whole label table);
+    // an empty graph (no edges, or only self-loops) sums to 0 and converges
+    // after one no-op round
+    var cSum = c.agg(coalesce(sum(col("c")), lit(0L))).first().getLong(0)
     var converged = false
     var i = 0
     val trunc = truncator()
@@ -1980,7 +1982,7 @@ object KgGraph {
             sequence(lit(1L), size(col("vs")).cast("long")),
             (v, i) => least(v, i))).as("c")),
         i + 1)
-      val nextSum = next.agg(sum(col("c"))).first().getLong(0)
+      val nextSum = next.agg(coalesce(sum(col("c")), lit(0L))).first().getLong(0)
       c = next
       converged = nextSum == cSum
       cSum = nextSum

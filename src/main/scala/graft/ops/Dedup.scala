@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.annotate.Corpus
+
 /** Deduplication operators for training-data curation: exact (hash groupBy),
   * n-gram Jaccard, MinHash+LSH, SimHash, benchmark decontamination. Scale
   * notes inline — the LSH paths exist precisely because the O(n²) exact
@@ -79,28 +81,9 @@ object Dedup {
       .otherwise(array().cast("array<long>"))
   }
 
-  /** Scale-adaptive input respread (optimization-guide §2.5, "one huge
-    * unsplittable file → repartition immediately after the read"): the
-    * shingle map is the dominant per-row cost of every candidate pass, and
-    * a source with fewer splits than cores (single-row-group parquet, a
-    * gzip member, a small-file tail) would run it nearly serially. When the
-    * scan already carries ≥ cores partitions — every real corpus — this is
-    * the identity: no exchange is inserted. The round-robin exchange moves
-    * text bytes once, strictly cheaper than leaving (cores−splits)/cores of
-    * the cluster idle through the corpus-wide map.
-    *
-    * ONLY safe on scan-shaped inputs (scans, unions/filters/maps of scans):
-    * `.rdd` on a frame containing exchanges would force eager AQE stage
-    * execution at construction time. Every call site passes the raw doc
-    * table (possibly filtered/unioned), never a shuffled intermediate. */
-  private def spread(docs: DataFrame): DataFrame = {
-    val target = docs.sparkSession.sparkContext.defaultParallelism
-    if (docs.rdd.getNumPartitions < target) docs.repartition(target) else docs
-  }
-
   private def pairIntersections(docs0: DataFrame, n: Int,
                                 maxDocFreq: Int): DataFrame = {
-    val docs = spread(docs0)
+    val docs = Corpus.spread(docs0)
     val sizes = docs.select(col("doc_id"),
       size(hashedShingles(col("text"), n)).as("n_shingles"))
     val postings = docs
@@ -184,8 +167,9 @@ object Dedup {
     // array_distinct before the explode: a min over the shingle SET equals
     // the min over the multiset, and md5 (the dominant per-row cost of the
     // signature stage) runs once per distinct shingle instead of once per
-    // occurrence; [[spread]] keeps that md5 map parallel on low-split inputs
-    val ds = spread(docs)
+    // occurrence; [[Corpus.spread]] keeps that md5 map parallel on low-split
+    // inputs
+    val ds = Corpus.spread(docs)
       .select(col("doc_id"),
         explode(array_distinct(shingles(col("text"), n))).as("shingle"))
       .withColumn("hx", md5(col("shingle")))
@@ -236,9 +220,8 @@ object Dedup {
     // hashed windows (see [[hashedShingles]]): intersection/union sizes over
     // the hashed sets equal the string-set sizes up to the documented
     // ~2^-64 collision class, and the candidate docs skip string building.
-    // spread() wraps the RAW doc scan (scan-shaped frames only — see its
-    // doc), before the pruning semi-join
-    val ds = spread(docs).join(ids, Seq("doc_id"), "left_semi")
+    // Corpus.spread wraps the RAW doc scan, before the pruning semi-join
+    val ds = Corpus.spread(docs).join(ids, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), hashedShingles(col("text"), n).as("sh"))
     candidates
       .join(ds.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
@@ -420,8 +403,8 @@ object Dedup {
     * object-mode island); scalar contract is [[simhash64]]. */
   def simhash(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    // [[spread]]: the per-token 64-bit vote loop is the map cost here
-    spread(docs).select(col("doc_id").cast("long").as("doc_id"),
+    // [[Corpus.spread]]: the per-token 64-bit vote loop is the map cost here
+    Corpus.spread(docs).select(col("doc_id").cast("long").as("doc_id"),
       expr("simhash64(text)").as("simhash"))
   }
 

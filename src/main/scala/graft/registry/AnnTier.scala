@@ -35,11 +35,11 @@ private[graft] object AnnTier {
     // S4: sharded-dictionary scan (>driver-memory escape hatch) — 4 term-id
     // shards, one corpus pass, cross-shard longest_only semantics; must
     // equal the single-automaton result, so it shares ann_direct's oracle.
-    // Runs the NATIVE sharded Generator (the scale path); the typed form
-    // stays parity-tested in ShardedSpec
+    // Same native match Generator as ann_direct, over the shard models
     "ann_sharded" -> ((s, dir) =>
       graft.annotate.NativeAnnotate
-        .annotateMatchesSharded(corpus(s, dir), shardedModels(s))
+        .annotateMatches(corpus(s, dir), shardedModels(s),
+          longestOnly = false, wholeWord = true)
         .select("url", "class_iri", "ont", "match_type").distinct()),
 
     // A2 all-occurrence counts per (doc, concept)

@@ -1288,6 +1288,18 @@ class KgGraphSpec extends AnyFunSuite {
     assert(got2 === got)
   }
 
+  test("coreness: empty and all-self-loop edge sets give 0 rows, normal schema") {
+    import spark.implicits._
+    val schema = KgGraph.coreness(Seq(("a", "b")).toDF("src", "dst")).schema
+    val empty = Seq.empty[(String, String)].toDF("src", "dst")
+    val loops = Seq(("a", "a"), ("b", "b")).toDF("src", "dst")
+    for ((name, e) <- Seq("empty" -> empty, "self-loops" -> loops)) {
+      val got = KgGraph.coreness(e)
+      assert(got.schema === schema, name)
+      assert(got.collect().isEmpty, name)
+    }
+  }
+
   test("simRank: hand-unrolled 3 rounds on a crafted digraph + hub cap") {
     import spark.implicits._
     // u→a u→b v→b v→c a→u b→v: I(a)={u} I(b)={u,v} I(c)={v} I(u)={a} I(v)={b}

@@ -287,4 +287,30 @@ class PlanContractSpec extends AnyFunSuite {
     assert(!pl.contains("CartesianProduct"), pl)
     assert(!pl.contains("BroadcastNestedLoopJoin"), pl)
   }
+
+  test("Corpus.spread: a non-scan frame comes back as the same object and " +
+       "starts no job; a low-split scan is respread") {
+    import org.apache.spark.sql.functions._
+    val sc = spark.sparkContext
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val agg = docs.groupBy("lang").agg(count(lit(1)).as("n"))
+    def inGroup[A](group: String)(f: => A): A = {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+    }
+    assert(inGroup("spread-agg")(graft.annotate.Corpus.spread(agg)) eq agg)
+    // control: the partition probe itself WOULD run a job on this frame.
+    // Job events reach the status store in order, so once the control's
+    // job is visible, any job the spread call had started would be too.
+    inGroup("spread-control")(agg.rdd.getNumPartitions)
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup("spread-control").isEmpty &&
+      System.nanoTime() < deadline) Thread.sleep(20)
+    assert(sc.statusTracker.getJobIdsForGroup("spread-control").nonEmpty)
+    assert(sc.statusTracker.getJobIdsForGroup("spread-agg").isEmpty)
+    // the one-file doc table, filtered and unioned, is still scan-shaped
+    val scan = docs.filter(col("doc_id") > 3).unionByName(docs)
+    assert(scan.rdd.getNumPartitions < sc.defaultParallelism)
+    assert(graft.annotate.Corpus.spread(scan).rdd.getNumPartitions === sc.defaultParallelism)
+  }
 }

@@ -1,17 +1,19 @@
 package graft
 
+import org.apache.spark.broadcast.Broadcast
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.annotate.{Corpus, Scan, Sharded}
-import graft.dict.{AutomatonBuild, DictBuild}
+import graft.annotate.{Corpus, NativeAnnotate, Scan, Sharded}
+import graft.dict.{AnnotatorModel, AutomatonBuild, DictBuild}
 import graft.fixture.OntologyFixture
 
 /** S4 sharded-dictionary scan (SURVEY §5 ">driver-memory escape hatch"):
-  * term-partitioned automaton shards must be indistinguishable from the
-  * single automaton across the full option surface — including the one
-  * cross-shard semantic, longest_only, which a shard-local filter would get
-  * wrong (a short match survives its shard while its longer overlapper
-  * lives in another shard). */
+  * the native match scan over term-partitioned automaton shards must be
+  * indistinguishable from the typed single-automaton reference
+  * ([[Scan.annotateDirect]]) across the full option surface and any shard
+  * count — including the one cross-shard semantic, longest_only, which a
+  * shard-local filter would get wrong (a short match survives its shard
+  * while its longer overlapper lives in another shard). */
 class ShardedSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"
@@ -21,10 +23,24 @@ class ShardedSpec extends AnyFunSuite {
   private lazy val model =
     AutomatonBuild.broadcastModel(spark, AutomatonBuild.build(spark, dict, "v1"))
   private lazy val sharded = Sharded.buildModels(spark, dict, "v1", numShards = 4)
+  private lazy val byK = Map(1 -> Sharded.buildModels(spark, dict, "v1", 1),
+    4 -> sharded, 7 -> Sharded.buildModels(spark, dict, "v1", 7))
   private lazy val corpus = Corpus.extract(Corpus.readDriverDocuments(spark, sfDir))
 
-  private def asSet(ds: org.apache.spark.sql.DataFrame): Set[(String, Int, Int, String, String, String)] =
-    ds.select("url", "from", "to", "classIri", "ont", "matchType").collect()
+  private type Row6 = (String, Int, Int, String, String, String)
+
+  /** The typed reference's match set (camelCase columns). */
+  private def typedSet(longest: Boolean, whole: Boolean = true): Set[Row6] =
+    Scan.annotateDirect(corpus, model, longest, whole).toDF()
+      .select("url", "from", "to", "classIri", "ont", "matchType").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2),
+        r.getString(3), r.getString(4), r.getString(5))).toSet
+
+  /** The native scan's match set over `models`. */
+  private def nativeSet(models: Seq[Broadcast[AnnotatorModel]], longest: Boolean,
+                        whole: Boolean = true): Set[Row6] =
+    NativeAnnotate.annotateMatches(corpus, models, longest, whole)
+      .select("url", "from", "to", "class_iri", "ont", "match_type").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2),
         r.getString(3), r.getString(4), r.getString(5))).toSet
 
@@ -49,40 +65,23 @@ class ShardedSpec extends AnyFunSuite {
 
   test("single-pass sharded scan == single automaton (all 4 option combos)") {
     for (longest <- Seq(false, true); whole <- Seq(true, false)) {
-      val single = asSet(Scan.annotateDirect(corpus, model, longest, whole).toDF())
-      val shard = asSet(Sharded.annotateDirect(corpus, sharded, longest, whole).toDF())
-      assert(shard === single, s"longestOnly=$longest wholeWord=$whole")
-      assert(shard.nonEmpty)
-    }
-  }
-
-  test("multi-pass sharded scan == single automaton (incl. longest_only)") {
-    for (longest <- Seq(false, true)) {
-      val single = asSet(Scan.annotateDirect(corpus, model, longest).toDF())
-      val multi = asSet(Sharded.annotateDirectMultiPass(corpus, sharded, longest))
-      assert(multi === single, s"longestOnly=$longest")
-    }
-  }
-
-  test("NATIVE sharded Generator == typed sharded scan (all 4 option combos)") {
-    for (longest <- Seq(false, true); whole <- Seq(true, false)) {
-      val typed = asSet(Sharded.annotateDirect(corpus, sharded, longest, whole).toDF())
-      val native = graft.annotate.NativeAnnotate
-        .annotateMatchesSharded(corpus, sharded, longest, whole)
-        .select("url", "from", "to", "class_iri", "ont", "match_type")
-        .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2),
-          r.getString(3), r.getString(4), r.getString(5))).toSet
-      assert(native === typed, s"longestOnly=$longest wholeWord=$whole")
-      assert(native.nonEmpty)
+      val single = typedSet(longest, whole)
+      assert(single.nonEmpty)
+      for ((k, models) <- byK)
+        assert(nativeSet(models, longest, whole) === single,
+          s"numShards=$k longestOnly=$longest wholeWord=$whole")
     }
   }
 
   test("native sharded plan has no object-mode island") {
-    val df = graft.annotate.NativeAnnotate.annotateMatchesSharded(corpus, sharded)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("Generate"), plan)
-    assert(!plan.contains("DeserializeToObject"), "object-mode island in native sharded plan")
-    assert(!plan.contains("MapPartitions"), "object-mode island in native sharded plan")
+    for ((k, models) <- Seq(1 -> Seq(model), 4 -> sharded)) {
+      val plan = NativeAnnotate.annotateMatches(corpus, models,
+        longestOnly = true, wholeWord = true).queryExecution.executedPlan.toString
+      assert(plan.contains("Generate"), s"k=$k: $plan")
+      assert(!plan.contains("Exchange"), s"k=$k: shuffle in the scan plan: $plan")
+      assert(!plan.contains("DeserializeToObject"), s"k=$k: object-mode island: $plan")
+      assert(!plan.contains("MapPartitions"), s"k=$k: object-mode island: $plan")
+    }
   }
 
   test("empty shard (numShards > term count) fails loudly, not with an NPE") {
@@ -93,23 +92,23 @@ class ShardedSpec extends AnyFunSuite {
   }
 
   test("shard-count robustness: k=1 (degenerate) and k=7 (uneven) still match") {
-    val single = asSet(Scan.annotateDirect(corpus, model, longestOnly = true).toDF())
-    for (k <- Seq(1, 7)) {
-      val models = Sharded.buildModels(spark, dict, "v1", numShards = k)
-      val got = asSet(Sharded.annotateDirect(corpus, models, longestOnly = true).toDF())
-      assert(got === single, s"numShards=$k")
-    }
+    // k=1 is the unsplit dictionary under the plain version: no split
+    // filter, no shard suffix, the same payload layout as a direct build
+    assert(byK(1).map(_.value.version) === Seq("v1"))
+    assert(byK(1).head.value.payload.length === model.value.payload.length)
+    assert(byK(7).map(_.value.version) === (0 until 7).map(s => s"v1-shard$s"))
+    val single = typedSet(longest = true)
+    for (k <- Seq(1, 7))
+      assert(nativeSet(byK(k), longest = true) === single, s"numShards=$k")
   }
 
-  test("ShardedDictionaryRecognizer == DictionaryRecognizer through the facade seam") {
+  test("DictionaryRecognizer: 4 shards == one model through the facade seam") {
     val opts = AnnotateOptions(longestOnly = true)
-    val single = new Annotator.DictionaryRecognizer(model)
-      .recognize(corpus, opts)
-      .collect().map(_.toSeq).toSet
-    val shard = new Annotator.ShardedDictionaryRecognizer(sharded)
-      .recognize(corpus, opts)
-      .collect().map(_.toSeq).toSet
-    assert(shard === single)
+    def recognized(models: Seq[Broadcast[AnnotatorModel]]) =
+      new Annotator.DictionaryRecognizer(models).recognize(corpus, opts)
+        .collect().map(_.toSeq).toSet
+    val shard = recognized(sharded)
+    assert(shard === recognized(Seq(model)))
     assert(shard.nonEmpty)
   }
 
@@ -118,11 +117,11 @@ class ShardedSpec extends AnyFunSuite {
     // DIFFERENT shards: scan per shard WITH longestOnly, union — if that
     // equals the correct result for every doc, the fixture can't pin the
     // semantics; assert the corpora differ somewhere so the test is live
-    import spark.implicits._
     val perShardLongest = sharded
-      .map(m => asSet(Scan.annotateDirect(corpus, m, longestOnly = true).toDF()))
+      .map(m => nativeSet(Seq(m), longest = true))
       .reduce(_ union _)
-    val correct = asSet(Sharded.annotateDirect(corpus, sharded, longestOnly = true).toDF())
+    val correct = nativeSet(sharded, longest = true)
+    assert(correct === typedSet(longest = true))
     assert(correct.subsetOf(perShardLongest))
     assert(perShardLongest !== correct,
       "fixture corpus has no cross-shard overlap — longest_only semantics unpinned; " +
